@@ -5,6 +5,13 @@ AQE on (runtime re-plan, skew-join splitting, partition coalescing), Arrow
 on (all sampling/text processors are pandas-UDF based), UTC session
 timezone (DuckDB-oracle comparability), shuffle partitions sized to cores
 rather than the 200 default.
+
+Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` (any ``spark.driver.memory`` value,
+e.g. ``4g``) is passed through unchanged when set. Unset, the heap is a
+quarter of physical memory (HotSpot's own ``MaxRAMPercentage=25`` share),
+capped at ``48g`` — so hosts with at least 192 GiB keep ``48g``. A fixed
+``48g`` on a small host lets G1 grow the heap past physical memory and the
+kernel OOM killer stops the JVM mid-run.
 """
 
 from __future__ import annotations
@@ -12,6 +19,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(env=None, phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for this host: ``SPARK_GRAFT_DRIVER_MEM`` if
+    set, else ``min(48g, physical memory / 4)``. ``env`` and ``phys_bytes``
+    default to ``os.environ`` and ``os.sysconf``'s page count x page size."""
+    env = os.environ if env is None else env
+    explicit = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = phys_bytes // 4 // (1024 * 1024)
+    return "48g" if mb >= 48 * 1024 else f"{mb}m"
 
 
 def get_spark(
@@ -43,7 +64,7 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # stdout hygiene: the console progress bar writes CR-spam that
         # consumed the driver's bench stdout-tail capture in round 5
