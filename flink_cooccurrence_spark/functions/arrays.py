@@ -32,17 +32,24 @@ def _fmt(x: float) -> str:
     return f"{x!r}D"
 
 
+def _array_sql(elems: list[str], elem_type: str) -> str:
+    """``array(...)`` SQL text; an empty one is CAST to its element type
+    (bare ``array()`` is ``array<void>``, not ``array<double>``)."""
+    if not elems:
+        return f"CAST(array() AS ARRAY<{elem_type}>)"
+    return "array(" + ",".join(elems) + ")"
+
+
 def lit_doubles(xs) -> Column:
     """array<double> literal column — one py4j call for the whole array."""
-    return F.expr("array(" + ",".join(_fmt(x) for x in xs) + ")")
+    return F.expr(_array_sql([_fmt(x) for x in xs], "DOUBLE"))
 
 
 def lit_double_matrix(xss) -> Column:
     """array<array<double>> literal column — one py4j call in total."""
     return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(_fmt(x) for x in xs) + ")" for xs in xss
+        _array_sql(
+            [_array_sql([_fmt(x) for x in xs], "DOUBLE") for xs in xss],
+            "ARRAY<DOUBLE>",
         )
-        + ")"
     )

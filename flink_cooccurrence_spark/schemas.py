@@ -10,6 +10,7 @@ joinable, prunable, and oracle-checkable. Counts are INT/LONG, never SHORT
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 #: (user, item, ts) interaction — DataStream<Tuple3<Integer,Integer,Long>>
@@ -63,3 +64,27 @@ TOPK_RESULT = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-held ``rows`` (tuples in the field order of the DDL string
+    ``schema``) as a DataFrame.
+
+    THE way to build a driver-local frame: the rows travel as one Arrow
+    table, which analyzes to a ``LocalRelation``. ``createDataFrame(list)``
+    instead parallelizes a Python RDD (a ``LogicalRDD``) that the optimizer
+    cannot see into and that forks Python workers every time it is scanned,
+    even when empty. A ``LocalRelation`` is folded at plan time: an empty
+    one drops out of a union or join with no Spark task at all.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)

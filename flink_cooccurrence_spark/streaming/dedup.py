@@ -97,6 +97,7 @@ from flink_cooccurrence_spark.operators.fused import (
     fused_token_pass,
     fused_winnow_fp_hashes,
 )
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 SEEN_HASHES_SCHEMA = "text_hash string, canonical_id long"
@@ -528,7 +529,7 @@ class DedupStreamEngine:
         import glob
 
         if not glob.glob(os.path.join(log_dir, "batch-*")):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(os.path.join(log_dir, "batch-*"))
 
     def metrics(self) -> dict[str, int]:

@@ -77,6 +77,7 @@ from flink_cooccurrence_spark.config import CooccurrenceConfig
 from flink_cooccurrence_spark.operators.cooccurrence import scored_rows, with_window
 from flink_cooccurrence_spark.operators.sampling import reservoir_user_deltas
 from flink_cooccurrence_spark.operators.topk import top_k_per_group
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 USER_COUNTS_SCHEMA = "user int, item int, n long"
@@ -579,19 +580,21 @@ class CooccurrenceStreamEngine:
         # empty only when NO batch has emitted yet — a real read failure
         # (corrupt file, permissions) must surface, not read as 'no output'
         if not glob.glob(os.path.join(self._topk_dir, "batch-*")):
-            return self.spark.createDataFrame(
-                [], "batch_id long, item int, rank int, other_item int, cnt long, score double"
+            return local_frame(
+                self.spark,
+                [],
+                "batch_id long, item int, rank int, other_item int, cnt long, score double",
             )
         return self.spark.read.parquet(os.path.join(self._topk_dir, "batch-*"))
 
     def final_topk(self, round_digits: int | None = 3) -> DataFrame:
         """Top-K per item over the *final* state — converges to the batch
         pipeline's ``topk_similar_items`` output."""
-        total_df = self.spark.createDataFrame(
-            [(self.total_observed(),)], "total long"
-        )
         scored = scored_rows(
-            self.item_rows(), self.row_sums(), total_df, round_digits
+            self.item_rows(),
+            self.row_sums(),
+            int(self.total_observed()),
+            round_digits,
         )
         return top_k_per_group(
             scored, ["item"], "score", self.config.top_k, tie_breakers=["other_item"]

@@ -42,6 +42,7 @@ from flink_cooccurrence_spark.operators.frequency import (
     _mg_candidates,
     _mg_trim,
 )
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 SUMMARY_SCHEMA = "key long, mg_count long"
@@ -98,7 +99,8 @@ class FrequencyStreamEngine:
         try:
             self.state.put(
                 "mg_summary",
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (None if pd.isna(k) else int(k), int(v))
                         for k, v in merged.items()

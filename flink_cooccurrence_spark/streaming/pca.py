@@ -36,6 +36,7 @@ from flink_cooccurrence_spark.operators.pca import (
     _sxy_frame,
     combine_covariance,
 )
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 CELLS_SCHEMA = "i int, j int, s long"
@@ -121,7 +122,7 @@ class CovarianceStream:
         accumulated micro-state — equals ``embedding_covariance`` on the
         accumulated stream (the tracker's parity gate)."""
         n = int(self.state.get_scalar("n_rows", 0))
-        n_frame = self.spark.createDataFrame([(n,)], "n long")
+        n_frame = local_frame(self.spark, [(n,)], "n long")
         return combine_covariance(
             self.state.get("cells", CELLS_SCHEMA),
             self.state.get("sums", SUMS_SCHEMA),

@@ -58,6 +58,7 @@ from flink_cooccurrence_spark.operators.quantiles import (
     ROUND_DIGITS,
     _qname,
 )
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 ROWS_SCHEMA = "key string, value double"
@@ -222,9 +223,7 @@ class QuantileStream:
             if bounds_dirty:
                 self.state.put(
                     "bounds",
-                    self.spark.createDataFrame(
-                        [(lo, hi, *new_true)], BOUNDS_SCHEMA
-                    ),
+                    local_frame(self.spark, [(lo, hi, *new_true)], BOUNDS_SCHEMA),
                 )
             self.state.put(
                 "counts",
@@ -300,12 +299,14 @@ class QuantileStream:
                         )
                     )
         if not targets:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 f"{key_name} string, "
                 + ", ".join(f"{_qname(q)} double" for q in qs),
             )
-        tf = self.spark.createDataFrame(
+        tf = local_frame(
+            self.spark,
             targets,
             "key string, bucket int, rn int, qname string, role string, frac double",
         )

@@ -23,6 +23,20 @@ buckets), not O(|state|): the copy-on-write safety story is unchanged
 (version dirs stay immutable; pointers flip atomically at ``commit``), and
 at cluster scale the same layout maps 1:1 onto a Delta/Iceberg MERGE with
 partition pruning.
+
+Driver-local frames (the empty reads of a table not yet written, and every
+other frame built from rows the driver holds) go through
+``schemas.local_frame``, never ``createDataFrame(list)``: the Arrow-built
+frame is a ``LocalRelation`` the optimizer folds away when empty, while a
+list-built one is a Python-RDD scan that forks Python workers each time a
+batch plan runs it.
+
+Thread safety: the engines' write pools write distinct tables
+concurrently, so every read-modify-write of the pointer map
+``_versions`` (and of the compaction reservations) holds ``_lock``. The
+long Spark write of a version runs outside the lock — the pointer is read
+before it and updated against the then-current map after it. Writes to the
+SAME table stay the caller's to serialize.
 """
 
 from __future__ import annotations
@@ -30,8 +44,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_cooccurrence_spark.schemas import local_frame
 
 #: retention policy (all three layouts): a version dir stays on disk while
 #: either the in-memory pointer or the last-committed pointer references it
@@ -64,6 +81,8 @@ class StateStore:
         #: kills the run with it, the orphan dir is unreferenced garbage,
         #: and the restart's GC may remove it.
         self._reserved: dict[str, set[int]] = {}
+        #: guards _versions and _reserved (see the module docstring)
+        self._lock = threading.Lock()
         # restart support: a new engine on an existing workdir (checkpoint
         # recovery) must resume from the persisted pointers, not version 0
         meta = self._committed_meta()
@@ -117,7 +136,7 @@ class StateStore:
         self._expect_layout(name, "whole")
         v = self._versions.get(name, 0)
         if v == 0:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(self._path(name, v))
 
     def put(self, name: str, df: DataFrame) -> None:
@@ -127,9 +146,11 @@ class StateStore:
         fails between puts leaves the persisted pointers at the pre-batch
         state, and the orphan version dirs are simply overwritten when the
         batch is retried (same next-version numbers)."""
-        v = self._versions.get(name, 0) + 1
+        with self._lock:
+            v = self._versions.get(name, 0) + 1
         df.write.mode("overwrite").parquet(self._path(name, v))
-        self._versions[name] = v
+        with self._lock:
+            self._versions[name] = v
         # GC keeps the in-memory pointer AND the committed (rollback-target)
         # pointer live — a blind v−RETAIN delete would destroy the rollback
         # target when a batch puts the same table more than once
@@ -154,7 +175,7 @@ class StateStore:
         self._expect_layout(name, "parts")
         ptr = self._versions.get(name)
         if not isinstance(ptr, dict):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         bmap: dict[str, int] = ptr["buckets"]
         want = bmap if buckets is None else [str(b) for b in buckets]
         paths = [
@@ -163,7 +184,7 @@ class StateStore:
             if bmap.get(b, 0) > 0
         ]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def nonempty_buckets(self, name: str) -> list[int]:
@@ -188,10 +209,8 @@ class StateStore:
         ends up with zero rows gets pointer 0 (reads as empty) — its old
         dir is no longer referenced and is garbage-collected."""
         self._expect_layout(name, "parts")
-        ptr = self._versions.get(name)
-        if not isinstance(ptr, dict):
-            ptr = {"latest": 0, "buckets": {}}
-        v = ptr["latest"] + 1
+        with self._lock:
+            v = self._parts_ptr(name)["latest"] + 1
         # co-locate each bucket into one task so a version holds one file
         # per bucket (without this, every upstream shuffle partition writes
         # a sliver into every bucket dir — P× the files per batch); the
@@ -204,10 +223,15 @@ class StateStore:
             for d in os.listdir(self._path(name, v))
             if d.startswith("_bucket=")
         }
-        bmap = dict(ptr["buckets"])
-        for b in buckets:
-            bmap[str(b)] = v if str(b) in written else 0
-        self._versions[name] = {"latest": v, "buckets": bmap}
+        with self._lock:
+            ptr = self._parts_ptr(name)
+            bmap = dict(ptr["buckets"])
+            for b in buckets:
+                bmap[str(b)] = v if str(b) in written else 0
+            self._versions[name] = {
+                "latest": max(ptr["latest"], v),
+                "buckets": bmap,
+            }
         self._gc_parts(name)
 
     def clear_parts(self, name: str, buckets: list[int]) -> None:
@@ -220,22 +244,31 @@ class StateStore:
         content is transient (the feedback swap) clears its stale buckets
         with no cluster work at all."""
         self._expect_layout(name, "parts")
+        with self._lock:
+            ptr = self._parts_ptr(name)
+            bmap = dict(ptr["buckets"])
+            for b in buckets:
+                bmap[str(b)] = 0
+            self._versions[name] = {"latest": ptr["latest"], "buckets": bmap}
+        self._gc_parts(name)
+
+    def _parts_ptr(self, name: str) -> dict:
+        """A partitioned table's in-memory pointer (empty before its first
+        write); call with ``_lock`` held."""
         ptr = self._versions.get(name)
         if not isinstance(ptr, dict):
             ptr = {"latest": 0, "buckets": {}}
-        bmap = dict(ptr["buckets"])
-        for b in buckets:
-            bmap[str(b)] = 0
-        self._versions[name] = {"latest": ptr["latest"], "buckets": bmap}
-        self._gc_parts(name)
+        return ptr
 
     def _gc_parts(self, name: str) -> None:
         """Remove version dirs referenced by neither the in-memory pointers
         nor the last-committed (on-disk) pointers — i.e. exactly the
         retain-current-plus-rollback-target policy of the whole-table path."""
         live: set[int] = set()
-        for src in (self._versions, self._committed_versions()):
-            ptr = src.get(name)
+        committed = self._committed_versions()
+        with self._lock:
+            ptrs = (self._versions.get(name), committed.get(name))
+        for ptr in ptrs:
             if isinstance(ptr, dict):
                 live.add(ptr["latest"])
                 live.update(v for v in ptr["buckets"].values() if v > 0)
@@ -267,10 +300,8 @@ class StateStore:
         same partition-pruned equi-join shape as ``get_parts``. Segment
         counts are bounded by ``compact_append``."""
         self._expect_layout(name, "append")
-        ptr = self._versions.get(name)
-        if not isinstance(ptr, dict) or "segments" not in ptr:
-            ptr = {"latest": 0, "segments": {}}
-        seg = ptr["latest"] + 1
+        with self._lock:
+            seg = self._append_ptr(name)["latest"] + 1
         path = self._path(name, seg)
         df.repartition(max(len(buckets), 1), "_bucket").write.mode(
             "overwrite"
@@ -280,10 +311,23 @@ class StateStore:
             for d in os.listdir(path)
             if d.startswith("_bucket=")
         )
-        segments = dict(ptr["segments"])
-        segments[str(seg)] = written
-        self._versions[name] = {"latest": seg, "segments": segments}
+        with self._lock:
+            ptr = self._append_ptr(name)
+            segments = dict(ptr["segments"])
+            segments[str(seg)] = written
+            self._versions[name] = {
+                "latest": max(ptr["latest"], seg),
+                "segments": segments,
+            }
         self._gc_append(name)
+
+    def _append_ptr(self, name: str) -> dict:
+        """An append table's in-memory pointer (empty before its first
+        write); call with ``_lock`` held."""
+        ptr = self._versions.get(name)
+        if not isinstance(ptr, dict) or "segments" not in ptr:
+            ptr = {"latest": 0, "segments": {}}
+        return ptr
 
     def _scan_roots(self, roots: list[str], schema: str) -> DataFrame | None:
         """One schema'd scan per segment root, unioned — THE segment read
@@ -337,7 +381,7 @@ class StateStore:
         self._expect_layout(name, "append")
         df = self._read_segments(name, schema, buckets)
         if df is None:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return df.drop("_bucket")
 
     def append_segment_count(self, name: str) -> int:
@@ -403,18 +447,17 @@ class StateStore:
         concurrently — rollback to a pre-reservation manifest would hand
         the reserved id back to ``append_parts`` while ``run`` writes it."""
         self._expect_layout(name, "append")
-        ptr = self._versions.get(name)
-        if not isinstance(ptr, dict) or "segments" not in ptr:
-            return None
-        snap = dict(ptr["segments"])
-        if not snap:
-            return None
-        seg = ptr["latest"] + 1
-        self._versions[name] = {"latest": seg, "segments": snap}
-        # pin the reserved id against GC for the compaction's lifetime —
-        # `latest` alone stops protecting it as soon as a later batch
-        # appends (its id supersedes `latest` in both live sets)
-        self._reserved.setdefault(name, set()).add(seg)
+        with self._lock:
+            ptr = self._append_ptr(name)
+            snap = dict(ptr["segments"])
+            if not snap:
+                return None
+            seg = ptr["latest"] + 1
+            self._versions[name] = {"latest": seg, "segments": snap}
+            # pin the reserved id against GC for the compaction's lifetime
+            # — `latest` alone stops protecting it as soon as a later batch
+            # appends (its id supersedes `latest` in both live sets)
+            self._reserved.setdefault(name, set()).add(seg)
         roots = [self._path(name, int(s)) for s, bs in snap.items() if bs]
         all_buckets = sorted({b for bs in snap.values() for b in bs})
         path = self._path(name, seg)
@@ -443,20 +486,26 @@ class StateStore:
                 # only cleanup owed is the reservation pin (else the id —
                 # and any partially-written output dir — is retained for
                 # process lifetime) and a GC of that now-unreferenced dir
-                self._reserved.get(name, set()).discard(seg)
+                with self._lock:
+                    self._reserved.get(name, set()).discard(seg)
                 self._gc_append(name)
                 return
-            cur = self._versions.get(name)
-            segments = {
-                s: bs for s, bs in cur["segments"].items() if s not in snap
-            }
-            if written:
-                segments[str(seg)] = written
-            self._versions[name] = {"latest": cur["latest"], "segments": segments}
-            # the swap above makes seg live through `segments` (or, when
-            # nothing was written, legitimately dead) — the pin comes off
-            # before GC so an empty compaction's dir is collected normally
-            self._reserved.get(name, set()).discard(seg)
+            with self._lock:
+                cur = self._versions.get(name)
+                segments = {
+                    s: bs for s, bs in cur["segments"].items() if s not in snap
+                }
+                if written:
+                    segments[str(seg)] = written
+                self._versions[name] = {
+                    "latest": cur["latest"],
+                    "segments": segments,
+                }
+                # the swap above makes seg live through `segments` (or, when
+                # nothing was written, legitimately dead) — the pin comes
+                # off before GC so an empty compaction's dir is collected
+                # normally
+                self._reserved.get(name, set()).discard(seg)
             self._gc_append(name)
 
         return run, finish
@@ -466,9 +515,11 @@ class StateStore:
         committed pointers (same retain policy as ``_gc_parts``), nor
         reserved by an in-flight compaction (whose output dir appears in no
         pointer until its ``finish``)."""
-        live: set[int] = set(self._reserved.get(name, ()))
-        for src in (self._versions, self._committed_versions()):
-            ptr = src.get(name)
+        committed = self._committed_versions()
+        with self._lock:
+            live: set[int] = set(self._reserved.get(name, ()))
+            ptrs = (self._versions.get(name), committed.get(name))
+        for ptr in ptrs:
             if isinstance(ptr, dict) and "segments" in ptr:
                 live.add(ptr["latest"])
                 live.update(int(s) for s in ptr["segments"])
@@ -487,8 +538,12 @@ class StateStore:
         update (pointers AND the batch-id/watermark scalars guarding it) is
         all-or-nothing from a restart's point of view."""
         tmp = self._meta_path + ".tmp"
+        with self._lock:
+            manifest = json.dumps(
+                {"versions": self._versions, "scalars": self.scalars}
+            )
         with open(tmp, "w") as f:
-            json.dump({"versions": self._versions, "scalars": self.scalars}, f)
+            f.write(manifest)
         os.replace(tmp, self._meta_path)
         # the manifest supersedes the legacy two-file layout — drop stale
         # copies so a crash can never resurrect older pointers through the
@@ -508,8 +563,9 @@ class StateStore:
         """Discard in-memory state back to the last commit (for retrying a
         failed batch in the same process)."""
         meta = self._committed_meta()
-        self.scalars = dict(meta["scalars"])
-        self._versions = dict(meta["versions"])
+        with self._lock:
+            self.scalars = dict(meta["scalars"])
+            self._versions = dict(meta["versions"])
 
     # -- scalar state (watermark, running total, metric counters) ------------
 

@@ -51,6 +51,7 @@ from flink_cooccurrence_spark.plans.text_index import (
     _bucket_py,
     score_postings,
 )
+from flink_cooccurrence_spark.schemas import local_frame
 from flink_cooccurrence_spark.streaming.state import StateStore
 
 POSTING_SCHEMA = "doc_id long, dl long, token string, tf long"
@@ -142,8 +143,8 @@ class TextIndexStream:
         indexed so far — bit-identical to ``bm25_topk`` on the
         accumulated corpus."""
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank long, doc_id long, n_matched int, bm25 double"
+            return local_frame(
+                self.spark, [], "rank long, doc_id long, n_matched int, bm25 double"
             )
         buckets = sorted(
             {_bucket_py(t, self.num_term_buckets) for t in terms}

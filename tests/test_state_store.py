@@ -416,3 +416,156 @@ def test_sync_compact_append_aborts_reservation_on_failed_run(spark, tmp_path):
         st.compact_append("log", SCHEMA, bad_reducer)
     assert st._reserved.get("log", set()) == set()
     assert _rows(st.get_append("log", SCHEMA)) == [(0, 0), (1, 1)]
+
+
+# -- driver-local frames: Arrow LocalRelations, never Python-RDD scans --------
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _assert_folds_away(spark, empty, schema):
+    """``empty`` carries exactly ``schema``, is no Python-RDD scan, and drops
+    out of a union at plan time (no Spark task, no Python worker)."""
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    assert empty.schema == struct
+    assert "LogicalRDD" not in _optimized(empty).toString()
+    x = spark.range(3).select(
+        *[F.col("id").cast(f.dataType).alias(f.name) for f in struct.fields]
+    )
+    assert _optimized(empty.unionByName(x)).sameResult(_optimized(x))
+
+
+def test_empty_state_reads_are_local_relations(spark, tmp_path):
+    st = StateStore(spark, str(tmp_path))
+    # never written: whole, partitioned and append layouts
+    _assert_folds_away(spark, st.get("w", SCHEMA), SCHEMA)
+    _assert_folds_away(spark, st.get_parts("p", SCHEMA), SCHEMA)
+    _assert_folds_away(spark, st.get_append("a", SCHEMA), SCHEMA)
+    # written, but every requested bucket is at pointer 0 or never written
+    st.put_parts("p", _bucketed(_df(spark, [(0, 10), (1, 11)])), [0, 1])
+    st.clear_parts("p", [0, 1])
+    _assert_folds_away(spark, st.get_parts("p", SCHEMA), SCHEMA)
+    _assert_folds_away(spark, st.get_parts("p", SCHEMA, [0, 3]), SCHEMA)
+    _assert_folds_away(spark, st.get_parts("p", SCHEMA, []), SCHEMA)
+
+
+def test_engine_empty_output_logs_are_local_relations(spark, tmp_path):
+    from flink_cooccurrence_spark.streaming.dedup import DedupStreamEngine
+    from flink_cooccurrence_spark.streaming.engine import (
+        CooccurrenceStreamEngine,
+    )
+
+    eng = CooccurrenceStreamEngine(spark, workdir=str(tmp_path / "cooc"))
+    try:
+        _assert_folds_away(
+            spark,
+            eng.topk_updates(),
+            "batch_id long, item int, rank int, other_item int, cnt long, "
+            "score double",
+        )
+    finally:
+        eng.close()
+    dd = DedupStreamEngine(spark, workdir=str(tmp_path / "dedup"))
+    try:
+        _assert_folds_away(
+            spark,
+            dd.exact_log(),
+            "doc_id long, text_hash string, canonical_id long, "
+            "is_duplicate boolean",
+        )
+        _assert_folds_away(
+            spark, dd.dup_pairs(), "doc_a long, doc_b long, est_jaccard double"
+        )
+        _assert_folds_away(
+            spark, dd.overlap_pairs(), "doc_a long, doc_b long, n_shared long"
+        )
+    finally:
+        dd.close()
+
+
+def _list_built_create_dataframe_calls(source: str) -> list[int]:
+    """Line numbers of ``createDataFrame`` calls whose data argument is a
+    list literal / comprehension or a name bound to one."""
+    import ast
+
+    tree = ast.parse(source)
+    list_nodes = (ast.List, ast.ListComp)
+    list_names = {
+        t.id
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and isinstance(node.value, list_nodes)
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name)
+    }
+    hits = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            continue
+        data = node.args[0] if node.args else next(
+            (k.value for k in node.keywords if k.arg == "data"), None
+        )
+        if isinstance(data, list_nodes) or (
+            isinstance(data, ast.Name) and data.id in list_names
+        ):
+            hits.append(node.lineno)
+    return hits
+
+
+def test_no_list_built_create_dataframe_in_streaming():
+    """Driver-local frames in ``streaming/`` go through
+    ``schemas.local_frame``: a list handed to ``createDataFrame`` becomes a
+    Python-RDD scan that forks Python workers whenever a plan runs it."""
+    import glob
+
+    import flink_cooccurrence_spark.streaming as pkg
+
+    assert _list_built_create_dataframe_calls(
+        "spark.createDataFrame([], s)\nrows = []\nspark.createDataFrame(rows, s)"
+    ) == [1, 3]
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(pkg.__file__), "*.py"))):
+        with open(path) as f:
+            offenders += [
+                f"{os.path.basename(path)}:{line}"
+                for line in _list_built_create_dataframe_calls(f.read())
+            ]
+    assert offenders == []
+
+
+def test_concurrent_put_parts_to_distinct_tables_keep_every_pointer(
+    spark, tmp_path
+):
+    """Write-pool threads move the shared pointer map; a lost update here
+    silently drops a table's just-written version at commit."""
+    import concurrent.futures
+    import sys
+
+    st = StateStore(spark, str(tmp_path))
+    names = [f"t{i}" for i in range(12)]
+
+    def put(i):
+        rows = [(i, 100 + i), (i + 1, 200 + i)]
+        st.put_parts(names[i], _bucketed(_df(spark, rows)), [i % 4, (i + 1) % 4])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(max_workers=len(names)) as pool:
+            list(pool.map(put, range(len(names)), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    st.commit()
+    for store in (st, StateStore(spark, str(tmp_path))):
+        for i, name in enumerate(names):
+            assert _rows(store.get_parts(name, SCHEMA)) == sorted(
+                [(i, 100 + i), (i + 1, 200 + i)]
+            )
