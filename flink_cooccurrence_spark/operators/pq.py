@@ -575,7 +575,20 @@ def residual_pq_fit(
         "m": m,
         "ksub": ksub,
         "n_iter": n_iter,
+        "centroids": centroids,
     }
+
+
+def _check_fit(fit: dict, **settings) -> None:
+    """Reject a caller-supplied :func:`residual_pq_fit` built with other
+    settings than the call consuming it — its codebooks would silently
+    encode against the wrong subspaces, codebook size or cell set."""
+    for key, want in settings.items():
+        if fit.get(key) != want:
+            raise ValueError(
+                f"fit= was built with {key}={fit.get(key)!r} but this call "
+                f"uses {key}={want!r}"
+            )
 
 
 def _ivf_pq_residual_topk(
@@ -608,6 +621,8 @@ def _ivf_pq_residual_topk(
         fit = residual_pq_fit(
             embeddings, m, ksub, n_iter, centroids=centroids
         )
+    else:
+        _check_fit(fit, m=m, ksub=ksub, n_iter=n_iter, centroids=centroids)
     cent_frame, res, books = fit["cent_frame"], fit["res"], fit["books"]
     # the fit's home-cell assignment is reused when this member probes a
     # single cell; a multi-probe member ranks top-nprobe against the SAME

@@ -17,6 +17,7 @@ from flink_cooccurrence_spark.operators.pq import (
     ivf_pq_topk,
     pq_codebooks,
     pq_codes,
+    residual_pq_fit,
 )
 
 
@@ -249,3 +250,31 @@ def test_fused_fit_equals_per_subspace_kmeans(spark, emb, books):
         )
         ref = kmeans_centroids(sub, k=PQ_KSUB, n_iter=PQ_ITERS)
         assert books[s] == ref, f"subspace {s} diverged from kmeans_centroids"
+
+
+#: settings of the small shared residual fit below (cheap: 2 subspaces,
+#: 2 centroids each, one Lloyd iteration over hash cells)
+FIT_SETTINGS = {"m": 2, "ksub": 2, "n_iter": 1, "centroids": "hash"}
+
+
+@pytest.fixture(scope="module")
+def small_fit(emb):
+    return residual_pq_fit(emb, **FIT_SETTINGS)
+
+
+def test_residual_fit_records_its_settings(spark, emb, small_fit):
+    assert {k: small_fit[k] for k in FIT_SETTINGS} == FIT_SETTINGS
+    # a fit consumed with the settings it was built with is accepted
+    ivf_pq_topk(emb, encode="residual", fit=small_fit, **FIT_SETTINGS)
+
+
+@pytest.mark.parametrize(
+    "field, other",
+    [("m", 4), ("ksub", 4), ("n_iter", 2), ("centroids", "kmeans")],
+)
+def test_mismatched_fit_is_rejected(spark, emb, small_fit, field, other):
+    """A caller-supplied ``fit=`` built with different settings would
+    encode against mismatched codebooks; it must fail loudly instead."""
+    call = dict(FIT_SETTINGS, **{field: other})
+    with pytest.raises(ValueError, match=field):
+        ivf_pq_topk(emb, encode="residual", fit=small_fit, **call)

@@ -569,3 +569,71 @@ def test_concurrent_put_parts_to_distinct_tables_keep_every_pointer(
             assert _rows(store.get_parts(name, SCHEMA)) == sorted(
                 [(i, 100 + i), (i + 1, 200 + i)]
             )
+
+
+def _last_stage_tasks(spark, group: str, fn) -> int:
+    """Task count of the last stage of the jobs ``fn`` runs — for a state
+    write, the stage that writes the version dir."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s
+        for job in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(job).stageIds
+    ]
+    return tracker.getStageInfo(max(stages)).numTasks
+
+
+def _files_per_bucket(path: str) -> dict[int, int]:
+    return {
+        int(d.split("=", 1)[1]): sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path)
+        if d.startswith("_bucket=")
+    }
+
+
+def test_writes_keep_one_file_per_bucket_on_capped_tasks(spark, tmp_path):
+    """With more buckets than the session's cores, every state write still
+    leaves exactly one parquet file per written bucket, while its write
+    stage runs at most ``defaultParallelism`` tasks (each write task pays
+    a fixed deserialization cost; ``state.py`` module docstring)."""
+    cores = spark.sparkContext.defaultParallelism
+    n = 2 * cores
+    buckets = list(range(n))
+    # several upstream partitions, each holding rows of many buckets
+    df = _bucketed(_df(spark, [(i, i) for i in range(4 * n)]), n).repartition(5)
+    st = StateStore(spark, str(tmp_path))
+
+    tasks = _last_stage_tasks(
+        spark, f"put_parts-{tmp_path}", lambda: st.put_parts("t", df, buckets)
+    )
+    assert tasks <= cores
+    assert _files_per_bucket(st._path("t", 1)) == {b: 1 for b in buckets}
+
+    for i in range(2):
+        tasks = _last_stage_tasks(
+            spark,
+            f"append_parts-{i}-{tmp_path}",
+            lambda: st.append_parts("log", df, buckets),
+        )
+        assert tasks <= cores
+        assert _files_per_bucket(st._path("log", i + 1)) == {b: 1 for b in buckets}
+
+    tasks = _last_stage_tasks(
+        spark,
+        f"compact_append-{tmp_path}",
+        lambda: st.compact_append("log", SCHEMA),
+    )
+    assert tasks <= cores
+    (seg,) = st._versions["log"]["segments"]
+    assert _files_per_bucket(st._path("log", int(seg))) == {b: 1 for b in buckets}
+    assert _rows(st.get_append("log", SCHEMA)) == sorted(
+        [(i, i) for i in range(4 * n)] * 2
+    )
